@@ -10,7 +10,9 @@ Spark side: one checkpointed streaming query per registered pipeline —
 the checkpoint IS the per-pipeline cursor, fan-out independence falls
 out of independent queries over the same replay source, and the sink is
 an idempotent ``foreachBatch`` consumer (Elasticsearch via
-``write_cdc_dataframe``, or any callable for custom sinks).
+``write_cdc_dataframe``, or any callable for custom sinks) that
+receives the transformed batch persisted, so every action the sink
+runs reads one materialization of it.
 """
 
 from __future__ import annotations
@@ -114,7 +116,17 @@ class PipelineRunner:
         routed = pipeline.route(parse_envelope(raw))
 
         def batch_fn(batch_df: DataFrame, batch_id: int) -> None:
-            sink(pipeline.transform(batch_df), batch_id)
+            # a sink runs several actions per batch (a lake merge is a
+            # locate, a data write and a change-feed write; the ES sink
+            # one more): without the persist each action re-reads the
+            # source and re-runs the transform. Materialize once, and
+            # release the blocks before the batch returns (blocking, so
+            # no block removal keeps running into the next batch).
+            out = pipeline.transform(batch_df).persist()
+            try:
+                sink(out, batch_id)
+            finally:
+                out.unpersist(blocking=True)
 
         checkpoint = f"{self.checkpoint_root}/{pipeline.name}"
         writer = (

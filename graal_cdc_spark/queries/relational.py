@@ -3703,10 +3703,10 @@ def _r79(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
     # integer node encoding (customer 2k, supplier 2k+1) — the joins,
-    # distinct, and aggregations all hash these keys ~5× over the
-    # million-row edge frame; bigint keys keep that JVM-cheap, and the
-    # 'c…'/'s…' labels the oracle speaks are reconstructed at node
-    # grain in the final projection
+    # the dropDuplicates edge dedup and the aggregations all hash these
+    # keys ~5× over the million-row edge frame; bigint keys keep that
+    # JVM-cheap, and the 'c…'/'s…' labels the oracle speaks are
+    # reconstructed at node grain in the final projection
     pairs = (
         orders.select("o_orderkey", "o_custkey")
         .join(li.select("l_orderkey", "l_suppkey"),
@@ -3721,7 +3721,7 @@ def _r79(spark: SparkSession, sf_dir: str) -> DataFrame:
     # partitioned by the join key: InMemoryRelation preserves the
     # hash partitioning (localCheckpoint does not), so neither
     # iteration re-exchanges the million-row edge table, and the
-    # orders⋈lineitem distinct runs once instead of per-consumer.
+    # orders⋈lineitem dedup runs once instead of per-consumer.
     # Memoized (build-once): repeat executions reuse the two cached
     # frames rather than persisting fresh copies every call.
     app = spark.sparkContext.applicationId

@@ -272,10 +272,13 @@ def table_schema(
     """The Spark schema as of ``version`` (``None`` if the log
     carries no schema action — legacy tables)."""
     fields = schema_fields(table, version)
-    if fields is None:
-        return None
-    ddl = ", ".join(f"`{f['name']}` {f['type']}" for f in fields)
-    return T.StructType.fromDDL(ddl)
+    return None if fields is None else _logical_schema(fields)
+
+
+def _logical_schema(fields: list[dict]) -> T.StructType:
+    return T.StructType.fromDDL(
+        ", ".join(f"`{f['name']}` {f['type']}" for f in fields)
+    )
 
 
 def _phys(field: dict) -> str:
@@ -793,13 +796,13 @@ def _stage_data_files(
     fields: list[dict] | None = None,
     pcols: list[str] | None = None,
     pre_shaped: bool = False,
-) -> list[tuple[str, int, dict, dict]]:
+) -> list[dict]:
     """Stage data files; with ``pcols`` (physical partition columns)
     the write is hive-split per partition value. Unless ``pre_shaped``,
     a partitioned stage first hash-repartitions by the partition
     columns (the standard dynamic-partition-insert shuffle) so each
     value lands in ONE task — one file per partition value per commit,
-    not one per (input task × value)."""
+    not one per (input task × value). Returns the ``add`` actions."""
     pdf = _to_physical(df, fields)
     if pcols:
         # a subset-write omitting a partition column would otherwise
@@ -820,11 +823,13 @@ def _stage_data_files(
                 if n_files
                 else pdf.repartition(*cols)
             )
-        return _stage_partitioned(pdf, table, fields, pcols)
-    return [
-        (p, r, st, {})
-        for p, r, st in _stage_parquet(pdf, table, "", "part", n_files)
-    ]
+        staged = _stage_partitioned(pdf, table, fields, pcols)
+    else:
+        staged = [
+            (p, r, st, {})
+            for p, r, st in _stage_parquet(pdf, table, "", "part", n_files)
+        ]
+    return [_add_action(*s) for s in staged]
 
 
 def _add_action(p: str, r: int, st: dict, part: dict) -> dict:
@@ -993,10 +998,7 @@ def _check_constraints(
     if not constraints:
         return
     if fields is not None:
-        schema = T.StructType.fromDDL(
-            ", ".join(f"`{f['name']}` {f['type']}" for f in fields)
-        )
-        df = _align(df, schema)
+        df = _align(df, _logical_schema(fields))
     viol = None
     for expr in constraints.values():
         v = F.expr(f"NOT coalesce(({expr}), true)")
@@ -1097,12 +1099,7 @@ def commit_append(
     pcols, introduces = _resolve_partition_cols(
         snap, effective, partition_by, "commit_append"
     )
-    adds = [
-        _add_action(p, r, st, part)
-        for p, r, st, part in _stage_data_files(
-            df, table, n_files, effective, pcols
-        )
-    ]
+    adds = _stage_data_files(df, table, n_files, effective, pcols)
 
     def mapping(fields):
         if fields is None:
@@ -1509,12 +1506,9 @@ def commit_delete_where(
         survivors = touched_df.filter(
             f"NOT coalesce(({predicate}), false)"
         )
-        actions += [
-            _add_action(p, r, st, part)
-            for p, r, st, part in _stage_data_files(
-                survivors, table, None, fields, snap.partition_cols
-            )
-        ]
+        actions += _stage_data_files(
+            survivors, table, None, fields, snap.partition_cols
+        )
         if write_cdf:
             # net delta of a delete == the matching rows, verbatim
             deleted = touched_df.filter(predicate).withColumn(
@@ -1526,6 +1520,138 @@ def commit_delete_where(
     # a delete computed against a stale snapshot must NOT blind-retry:
     # the conflict surfaces to the caller, who re-runs on the new head
     return _try_commit(table, actions, "delete", base, cdf=cdf_entries)
+
+
+def _file_budget(df: DataFrame) -> int:
+    """How many data files ``df`` should stage as: one per read split
+    (``spark.sql.files.maxPartitionBytes``) of the optimizer's size
+    estimate, at least one. Used as a ``coalesce`` bound, which never
+    adds partitions, so an unknown size (Spark's huge default
+    estimate, clamped to a JVM int) keeps the input's partitioning."""
+    size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    conf = df.sparkSession._jsparkSession.sessionState().conf()
+    split = conf.filesMaxPartitionBytes()
+    return min(max(1, -(-size // split)), 2**31 - 1)
+
+
+def _net_delta(incoming: DataFrame, dropped: DataFrame) -> DataFrame:
+    """A keyed rewrite's NET row delta as ONE signed-count aggregate:
+    ``incoming`` rows count +1, ``dropped`` rows -1, grouped by every
+    data column; a net ``n > 0`` emits ``n`` inserts, ``n < 0`` emits
+    ``|n|`` deletes and 0 (a row replaced by an identical one)
+    cancels.
+
+    This is multiset-identical to ``incoming.exceptAll(dropped)``
+    (inserts) ∪ ``dropped.exceptAll(incoming)`` (deletes): for a
+    distinct row with ``a`` incoming and ``b`` dropped copies, the
+    first leg keeps ``max(a - b, 0)`` copies and the second
+    ``max(b - a, 0)`` — exactly ``n = a - b`` by sign. Grouping is as
+    null-safe as exceptAll's (GROUP BY puts NULLs in one group and
+    normalizes NaN / -0.0; Spark itself plans exceptAll as this same
+    +1/-1 aggregate), so the two legs' two shuffles become one."""
+    cols = [F.col(f"`{c}`") for c in incoming.columns]
+    n = F.col("__n")
+    return (
+        incoming.withColumn("__n", F.lit(1))
+        .unionByName(dropped.withColumn("__n", F.lit(-1)))
+        .groupBy(*cols)
+        .agg(F.sum("__n").alias("__n"))
+        .filter(n != 0)
+        .select(
+            *cols,
+            F.when(n > 0, F.lit("insert"))
+            .otherwise(F.lit("delete"))
+            .alias("_change_type"),
+            F.explode(
+                F.array_repeat(F.lit(0), F.abs(n).cast("int"))
+            ).alias("__r"),
+        )
+        .drop("__r")
+    )
+
+
+def _commit_keyed_rewrite(
+    spark: SparkSession,
+    table: str,
+    base: int,
+    snap: _Snapshot,
+    operation: str,
+    context: str,
+    rows: DataFrame,
+    keys: DataFrame,
+    key_cols: list[str],
+    eff: list[dict],
+    merged: list[dict] | None,
+    write_cdf: bool,
+    update_only: bool = False,
+    update_semantics: bool = False,
+) -> int:
+    """The copy-on-write commit behind :func:`commit_upsert_keys` and
+    :func:`commit_merge`: locate the live files holding any of
+    ``keys``, drop their rows for those keys, write ``rows`` in their
+    place and commit remove+add as one version.
+
+    - **One data write.** The touched files' survivors and the
+      incoming rows stage together, coalesced to one file per read
+      split of their estimated size (one file per partition value on
+      a partitioned table) — a many-partition input, such as a
+      persisted micro-batch, does not stage a file per partition.
+    - **One net-delta aggregate** (:func:`_net_delta`) for the
+      persisted change feed, or the update classification with
+      ``update_semantics``.
+    - ``update_only`` keeps only the incoming rows whose key is
+      already in the table; constraints are checked on exactly the
+      rows written (survivors already passed).
+
+    ``keys`` need not be distinct: semi/anti joins and the locate's
+    min/max ignore duplicates, and a ``distinct`` would cost a shuffle
+    (one more job) in each of the four queries that read the keys."""
+    schema = _logical_schema(eff)
+    touched = _locate_touched(
+        spark, table, snap, keys=keys, key_cols=key_cols
+    )
+    actions: list[dict] = [{"remove": {"path": p}} for p in touched]
+    incoming = _align(rows, schema)
+    survivors = dropped = None
+    if touched:
+        touched_df = _align(
+            _read_data(spark, table, touched, snap.schema), schema
+        )
+        survivors = touched_df.join(keys, key_cols, "left_anti")
+        dropped = touched_df.join(keys, key_cols, "left_semi")
+        if update_only:
+            incoming = incoming.join(
+                dropped.select(*key_cols), key_cols, "left_semi"
+            )
+    elif update_only:
+        incoming = incoming.limit(0)
+    _check_constraints(incoming, snap.constraints, context, eff)
+    out = incoming if survivors is None else survivors.unionByName(incoming)
+    if not snap.partition_cols:
+        out = out.coalesce(_file_budget(out))
+    actions += _stage_data_files(out, table, None, eff, snap.partition_cols)
+    cdf_entries: list[dict] | None = None
+    if write_cdf:
+        if dropped is None:
+            feed = incoming.withColumn("_change_type", F.lit("insert"))
+        elif update_semantics:
+            old_keys = dropped.select(*key_cols)
+            pre = dropped.withColumn(
+                "_change_type", F.lit("update_preimage")
+            )
+            post = incoming.join(old_keys, key_cols, "left_semi").withColumn(
+                "_change_type", F.lit("update_postimage")
+            )
+            ins = incoming.join(old_keys, key_cols, "left_anti").withColumn(
+                "_change_type", F.lit("insert")
+            )
+            feed = pre.unionByName(post).unionByName(ins)
+        else:
+            feed = _net_delta(incoming, dropped)
+        cdf_entries = _stage_cdf_files(feed, table, eff)
+    return _try_commit(
+        table, actions, operation, base, cdf=cdf_entries, schema=merged
+    )
 
 
 def commit_upsert_keys(
@@ -1546,100 +1672,33 @@ def commit_upsert_keys(
     ``exceptAll`` dropped rows as inserts, the reverse as deletes —
     an incoming row identical to the row it replaces cancels, the
     same multiset semantics the file-diff reconstruction yields) is
-    persisted under ``_changes/`` at write time: one diff shuffle
-    paid by the writer over O(rows touched), zero paid by any number
-    of feed consumers.
+    persisted under ``_changes/`` at write time, paid by the writer
+    over O(rows touched), zero paid by any number of feed consumers.
 
     ``update_semantics`` switches the persisted delta to Delta-CDF
     update classification: a key present on both sides feeds its old
     row as ``update_preimage`` and its new row as
     ``update_postimage`` (even when byte-identical — MERGE touched
-    it), a new key feeds ``insert``. Cheaper than the net diff (two
-    key-semi-joins, no exceptAll) and the classification downstream
-    MERGE consumers want; the default stays the net insert/delete
-    feed so the batch reconstruction and the write-time delta agree
-    bit-for-bit.
+    it), a new key feeds ``insert``. The default stays the net
+    insert/delete feed so the batch reconstruction and the write-time
+    delta agree bit-for-bit.
 
-    Locate shape: the incoming keys' per-column min/max stats-prune
-    candidate files from the log alone (a key-range-clustered table —
-    ``commit_optimize(sort_cols=...)`` — narrows a point merge to a
-    handful of files), then ONE distributed probe job finds the
-    touched files — never a Spark job per live file (see
-    :func:`_locate_touched`)."""
+    Scale shape: the incoming keys' min/max stats-prune candidate
+    files from the log alone, then ONE distributed probe job finds
+    the touched files (see :func:`_locate_touched`); survivors and
+    incoming rows stage in ONE data write, and the net delta is ONE
+    signed-count aggregate (see :func:`_commit_keyed_rewrite`)."""
     base = latest_version(table)
     snap = _fold_log(table, base if base >= 0 else None)
-    existing_fields, retired = snap.schema, snap.retired
     merged = _merged_schema(
-        existing_fields, _schema_fields_of(df), "commit_upsert_keys",
-        retired,
+        snap.schema, _schema_fields_of(df), "commit_upsert_keys",
+        snap.retired,
     )
-    eff = merged if merged is not None else existing_fields
-    _check_constraints(df, snap.constraints, "commit_upsert_keys", eff)
-    keys = df.select(*key_cols).distinct()
-    touched = _locate_touched(
-        spark, table, snap, keys=keys, key_cols=key_cols
-    )
-    actions: list[dict] = [{"remove": {"path": p}} for p in touched]
-    dropped = None
-    if touched:
-        touched_df = _read_data(spark, table, touched, existing_fields)
-        survivors = touched_df.join(keys, key_cols, "left_anti")
-        actions += [
-            _add_action(p, r, st, part)
-            for p, r, st, part in _stage_data_files(
-                survivors, table, None, eff, snap.partition_cols
-            )
-        ]
-        if write_cdf:
-            dropped = touched_df.join(keys, key_cols, "left_semi")
-    actions += [
-        _add_action(p, r, st, part)
-        for p, r, st, part in _stage_data_files(
-            df, table, None, eff, snap.partition_cols
-        )
-    ]
-    cdf_entries: list[dict] | None = None
-    if write_cdf:
-        out_fields = (
-            merged
-            if merged is not None
-            else (
-                existing_fields
-                if existing_fields is not None
-                else _schema_fields_of(df)
-            )
-        )
-        out_schema = T.StructType.fromDDL(
-            ", ".join(f"`{f['name']}` {f['type']}" for f in out_fields)
-        )
-        incoming = _align(df, out_schema)
-        if dropped is None:
-            feed = incoming.withColumn("_change_type", F.lit("insert"))
-        elif update_semantics:
-            dropped = _align(dropped, out_schema)
-            old_keys = dropped.select(*key_cols).distinct()
-            pre = dropped.withColumn(
-                "_change_type", F.lit("update_preimage")
-            )
-            post = incoming.join(old_keys, key_cols, "left_semi").withColumn(
-                "_change_type", F.lit("update_postimage")
-            )
-            ins = incoming.join(old_keys, key_cols, "left_anti").withColumn(
-                "_change_type", F.lit("insert")
-            )
-            feed = pre.unionByName(post).unionByName(ins)
-        else:
-            dropped = _align(dropped, out_schema)
-            inserts = incoming.exceptAll(dropped).withColumn(
-                "_change_type", F.lit("insert")
-            )
-            deletes = dropped.exceptAll(incoming).withColumn(
-                "_change_type", F.lit("delete")
-            )
-            feed = inserts.unionByName(deletes)
-        cdf_entries = _stage_cdf_files(feed, table, eff)
-    return _try_commit(
-        table, actions, "upsert", base, cdf=cdf_entries, schema=merged
+    return _commit_keyed_rewrite(
+        spark, table, base, snap, "upsert", "commit_upsert_keys", df,
+        df.select(*key_cols), key_cols,
+        merged if merged is not None else snap.schema, merged,
+        write_cdf, update_semantics=update_semantics,
     )
 
 
@@ -1681,12 +1740,15 @@ def commit_merge(
     Scale shape: identical to the upsert — key min/max stats-prune
     candidate files from the log, ONE distributed probe job locates
     the touched files (never a job per file — see
-    :func:`_locate_touched`), survivors rewrite once, and the
-    persisted change delta costs one diff shuffle over O(rows
-    touched) paid by the writer."""
+    :func:`_locate_touched`), survivors and written rows stage in ONE
+    data write, and the persisted change delta is ONE signed-count
+    aggregate over O(rows touched) paid by the writer (see
+    :func:`_commit_keyed_rewrite`). Persist a source that is
+    expensive to recompute (``PipelineRunner`` persists each
+    micro-batch): the merge reads it once per action."""
     base = latest_version(table)
     snap = _fold_log(table, base if base >= 0 else None)
-    existing_fields, retired = snap.schema, snap.retired
+    existing_fields = snap.schema
     if existing_fields is not None and not evolve_schema:
         want = [f["name"] for f in existing_fields]
         missing = [c for c in want if c not in df.columns]
@@ -1706,83 +1768,27 @@ def commit_merge(
                     f"the table but {src_types[c]} in the source — "
                     "changing a column's type is not supported"
                 )
-        df = df.select(*want, *[c for c in df.columns if c not in want])
-        data_df = df.select(*want)
         merged = None
     else:
-        data_df = df
         merged = _merged_schema(
-            existing_fields, _schema_fields_of(df), "commit_merge", retired
+            existing_fields, _schema_fields_of(df), "commit_merge",
+            snap.retired,
         )
     eff = merged if merged is not None else (
         existing_fields
         if existing_fields is not None
-        else _schema_fields_of(data_df)
+        else _schema_fields_of(df)
     )
-    data_cols = [f["name"] for f in eff]
-    if delete_when:
-        upd_src = df.filter(f"NOT coalesce(({delete_when}), false)").select(
-            *data_cols
-        )
-    else:
-        upd_src = df.select(*data_cols)
-    keys = df.select(*key_cols).distinct()
-    touched = _locate_touched(
-        spark, table, snap, keys=keys, key_cols=key_cols
+    src = (
+        df.filter(f"NOT coalesce(({delete_when}), false)")
+        if delete_when
+        else df
     )
-    actions: list[dict] = [{"remove": {"path": p}} for p in touched]
-    dropped = None
-    matched_keys = None
-    if touched:
-        touched_df = _read_data(spark, table, touched, existing_fields)
-        survivors = touched_df.join(keys, key_cols, "left_anti")
-        actions += [
-            _add_action(p, r, st, part)
-            for p, r, st, part in _stage_data_files(
-                survivors, table, None, eff, snap.partition_cols
-            )
-        ]
-        dropped = touched_df.join(keys, key_cols, "left_semi")
-        matched_keys = dropped.select(*key_cols).distinct()
-    if insert_new or matched_keys is None:
-        incoming_rows = upd_src
-        if matched_keys is None and not insert_new:
-            incoming_rows = upd_src.limit(0)
-    else:
-        # update-only: keep source rows whose key exists in the target
-        incoming_rows = upd_src.join(matched_keys, key_cols, "left_semi")
-    # constraints are checked on exactly the rows this merge WRITES
-    # (survivors already passed; rows an update-only merge drops or a
-    # delete clause removes never enter the table, so they cannot
-    # reject the commit)
-    _check_constraints(incoming_rows, snap.constraints, "commit_merge", eff)
-    actions += [
-        _add_action(p, r, st, part)
-        for p, r, st, part in _stage_data_files(
-            incoming_rows, table, None, eff, snap.partition_cols
-        )
-    ]
-    cdf_entries: list[dict] | None = None
-    if write_cdf:
-        out_fields = eff
-        out_schema = T.StructType.fromDDL(
-            ", ".join(f"`{f['name']}` {f['type']}" for f in out_fields)
-        )
-        incoming = _align(incoming_rows, out_schema)
-        if dropped is None:
-            feed = incoming.withColumn("_change_type", F.lit("insert"))
-        else:
-            dropped_a = _align(dropped, out_schema)
-            inserts = incoming.exceptAll(dropped_a).withColumn(
-                "_change_type", F.lit("insert")
-            )
-            deletes = dropped_a.exceptAll(incoming).withColumn(
-                "_change_type", F.lit("delete")
-            )
-            feed = inserts.unionByName(deletes)
-        cdf_entries = _stage_cdf_files(feed, table, eff)
-    return _try_commit(
-        table, actions, "merge", base, cdf=cdf_entries, schema=merged
+    return _commit_keyed_rewrite(
+        spark, table, base, snap, "merge", "commit_merge",
+        src.select(*[f["name"] for f in eff]),
+        df.select(*key_cols), key_cols, eff, merged,
+        write_cdf, update_only=not insert_new,
     )
 
 
@@ -1939,10 +1945,7 @@ def commit_optimize(
             df, table, None, fields, snap.partition_cols or None,
             pre_shaped=True,
         )
-        actions = [{"remove": {"path": p}} for p in files]
-        actions += [
-            _add_action(p, r, st, part) for p, r, st, part in staged
-        ]
+        actions = [{"remove": {"path": p}} for p in files] + staged
         return _try_commit(
             table, actions, "optimize", base, data_change=False
         )
@@ -1965,10 +1968,7 @@ def commit_optimize(
         staged = _stage_data_files(df, table, None, fields)
     else:
         staged = _stage_data_files(df, table, n_files, fields)
-    actions = [{"remove": {"path": p}} for p in files]
-    actions += [
-        _add_action(p, r, st, part) for p, r, st, part in staged
-    ]
+    actions = [{"remove": {"path": p}} for p in files] + staged
     # like delete: a stale-snapshot optimize must not blind-retry
     return _try_commit(
         table, actions, "optimize", base, data_change=False
@@ -2023,10 +2023,7 @@ def commit_repartition(
         )
     df = _read_data(spark, table, list(files), fields)
     staged = _stage_data_files(df, table, None, fields, pcols or None)
-    actions = [{"remove": {"path": p}} for p in files]
-    actions += [
-        _add_action(p, r, st, part) for p, r, st, part in staged
-    ]
+    actions = [{"remove": {"path": p}} for p in files] + staged
     return _try_commit(
         table, actions, "repartition", base, data_change=False,
         partition_cols=pcols,

@@ -20,8 +20,10 @@ Gotcha (observed empirically): metrics count ROW PASSES, not distinct
 rows — a ``foreachBatch`` body that runs several actions re-executes
 the source scan per action and inflates the counts. Persist the batch
 DataFrame first (``batch.persist()``) so the plan above the
-observation runs once; the sink-per-query path (no foreachBatch) is
-immune.
+observation runs once. ``PipelineRunner`` already does this: it
+persists each transformed micro-batch before its sink runs, so an
+observation inside a pipeline transform counts each row once; the
+sink-per-query path (no foreachBatch) is immune.
 """
 
 from __future__ import annotations

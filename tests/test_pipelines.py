@@ -458,6 +458,73 @@ def test_runner_with_graal_cdc_log_source(spark, sf_dir, tmp_path):
     assert sorted(delivered) == want_all  # no duplicates, nothing lost
 
 
+def test_runner_materializes_each_batch_once_for_multi_action_sinks(
+    spark, sf_dir, tmp_path
+):
+    """The runner hands the sink its transformed micro-batch persisted:
+    a sink running several actions (a lake merge — itself a locate, a
+    data write and a change-feed write — then a count and a collect)
+    pushes every input row through the transform exactly once per
+    batch, and no persisted RDD outlives the batch."""
+    from graal_cdc_spark.pipelines.runner import PipelineRunner
+    from graal_cdc_spark.sinks import versioned_lake as VL
+    from graal_cdc_spark.sources import cdc_log_ds as DS
+
+    pdir = tmp_path / "scripts"
+    pdir.mkdir()
+    (pdir / "once.py").write_text(FANOUT_PIPE % {"name": "once"})
+    reg = PipelineRegistry()
+    reg.refresh(pdir)
+    pipe = reg.pipelines()["once"]
+    passes = spark.sparkContext.accumulator(0)
+
+    @F.udf("long")
+    def tick(seq):
+        passes.add(1)
+        return seq
+
+    user = pipe.transform
+    pipe.transform = lambda df: user(df).withColumn("seq", tick("seq"))
+
+    rows = [
+        (r.seq, r.key, r.value)
+        for r in build_cdc_events(spark, sf_dir).orderBy("seq").limit(160).collect()
+    ]
+    log = str(tmp_path / "log")
+    table = str(tmp_path / "lake")
+    batches: list[tuple[bool, int, int]] = []
+
+    def sink(batch_df, batch_id):
+        before = passes.value
+        VL.commit_merge(spark, batch_df, table, ["key"], delete_when="op = 'd'")
+        n = batch_df.count()
+        assert len(batch_df.collect()) == n
+        batches.append((batch_df.is_cached, n, passes.value - before))
+
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    baseline = persisted().size()
+    runner = PipelineRunner(
+        spark,
+        replay_dir=log,
+        checkpoint_root=str(tmp_path / "ckpt"),
+        source_format="graal_cdc_log",
+    )
+    for part in (rows[:80], rows[80:]):
+        # one availableNow run per segment: two micro-batches
+        DS.append_segment(log, part, seal=True)
+        runner._running.clear()
+        runner.start(pipe, sink).query.awaitTermination()
+        assert persisted().size() == baseline
+    assert len(batches) == 2
+    for cached, n, n_passes in batches:
+        assert cached
+        assert n > 0 and n_passes == n, (
+            f"{n} routed rows went through the transform {n_passes} "
+            "times: the sink's actions recomputed the batch"
+        )
+    assert VL.latest_version(table) == 1
+
+
 def test_app_config_source_format(spark, sf_dir, tmp_path):
     """run_app boots the whole control plane from config with the
     graal_cdc_log connector as the replay source."""
